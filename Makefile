@@ -1,7 +1,7 @@
 # Entry points for the datamunging_spark engine.
 PY ?= python
 
-.PHONY: test correctness fuzz fuzz-streaming bench scaling scaling-gated
+.PHONY: test correctness fuzz fuzz-streaming bench perf scaling scaling-gated
 
 # Differential fuzzing: engine vs DuckDB oracle on randomized HOSTILE
 # corpora (empty texts, zero vectors, duplicates, unicode) — catches
@@ -29,6 +29,13 @@ correctness:
 
 bench:
 	$(PY) bench.py
+
+# Pipeline benchmark end to end (tracing off): both BENCHMARK.json
+# workloads at a fixed seed; the last stdout line of each is its result
+perf:
+	for w in munge_corpus extract_web; do \
+	  $(PY) perfbench/run.py --workload $$w --seed 1 --seconds 5 --trace 0 || exit 1; \
+	done
 
 scaling:
 	$(PY) scaling_bench.py

@@ -35,6 +35,7 @@ from pyspark.sql.window import Window as W
 
 from ..rulesets.loader import broadcast_rulesets
 from .munge import METRIC_FIELDS, OUTPUT_SCHEMA, _Munger, munge
+from .worker import pin_spark_home_zips
 
 HALO = 2  # must equal the R3 comparison window (SPEC.md §3)
 
@@ -54,6 +55,7 @@ _CHUNK_ROWS_SCHEMA = T.StructType(
 
 def _make_chunk_fn(rulesets_bc):
     def chunk_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        pin_spark_home_zips()
         munger = _Munger(rulesets_bc.value)
         pdf = pdf.sort_values("pos").reset_index(drop=True)
         t0 = time.monotonic()

@@ -37,6 +37,7 @@ from ..oracle.extract import (
     VOID_TAGS,
 )
 from .munge import INPUT_SCHEMA  # same spans table contract
+from .worker import pin_spark_home_zips
 
 EXTRACT_OUTPUT_SCHEMA = T.StructType(
     list(INPUT_SCHEMA.fields)
@@ -464,6 +465,7 @@ def make_extract_arrow():
     import pyarrow as pa
 
     def extract_arrow(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        pin_spark_home_zips()
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -545,6 +547,8 @@ _SPAN_ROWS_SCHEMA = T.StructType(
 
 def _extract_span_rows(batches: Iterator["pa.RecordBatch"]):
     import pyarrow as pa
+
+    pin_spark_home_zips()
 
     for batch in batches:
         if batch.num_rows == 0:

@@ -1,13 +1,13 @@
 """Spark-side munge operator: the whole correction cascade as ONE
-Arrow-batched ``mapInPandas`` pass.
+Arrow-batched ``mapInArrow`` pass.
 
 Independent implementation of SPEC.md (the oracle in ``oracle/munge.py``
 is the executable spec; pytest asserts span-sequence equality between the
 two). Regex-based where the oracle is loop-based, so agreement between
 them is evidence of correctness rather than shared code.
 
-Why ``mapInPandas`` and not a scalar pandas UDF: one document row must
-yield BOTH rewritten spans and a metrics struct; mapInPandas emits all
+Why ``mapInArrow`` and not a scalar pandas UDF: one document row must
+yield BOTH rewritten spans and a metrics struct; mapInArrow emits all
 output columns in one JVM<->Python crossing per Arrow batch, and lets us
 emit per-partition lineage without a second pass. The batch size is
 capped by ``spark.sql.execution.arrow.maxRecordsPerBatch`` (session.py)
@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from ..rulesets.loader import PUNCT, Rulesets
+from .worker import pin_spark_home_zips
 
 SPAN_STRUCT = T.StructType(
     [
@@ -359,6 +360,7 @@ def make_munge_arrow(rulesets_bc):
     import pyarrow as pa
 
     def munge_arrow(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        pin_spark_home_zips()
         munger = _Munger(rulesets_bc.value)
         for batch in batches:
             if batch.num_rows == 0:

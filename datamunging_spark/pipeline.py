@@ -1,7 +1,7 @@
 """The end-to-end extraction pipeline (SURVEY.md §3.2):
 
     spans table ──read──► anti-join(state) ──salted repartition──►
-        munge (ONE Arrow mapInPandas) ──► output table (= checkpoint)
+        munge (ONE mapInArrow stage) ──► output table (= checkpoint)
                                      └──► per-partition lineage table
 
 Resumability protocol (BASELINE.json:14 "resumable from checkpoint with
@@ -32,7 +32,7 @@ balance is the partition's bag of docs. We repartition on
 ``xxhash64(doc_id, salt)`` into ``partitions`` (default 4× parallelism)
 so a handful of monster docs spread across many small partitions, and cap
 Arrow batch size (session.py) so one batch never holds many monsters.
-AQE cannot help inside mapInPandas — this is the hand-built part
+AQE cannot help inside mapInArrow — this is the hand-built part
 (SURVEY.md §4).
 """
 
@@ -46,6 +46,15 @@ from .catalog import ParquetTableIO, default_io
 from .operators.chunked import munge_auto
 
 STATE_SUFFIX = "_state"
+
+# Summed lineage columns of each pipeline's output, keyed by the per-doc
+# wall-time column that tells the two outputs apart.
+LINEAGE_SUMS = {
+    "munge_us": ("pages", "tokens_total", "tokens_corrected"),
+    "extract_us": (
+        "html_blocks_kept", "pdf_lines_kept", "pdf_lines_dropped", "chars_out"
+    ),
+}
 
 
 @dataclass
@@ -62,13 +71,21 @@ def _done_docs(spark: SparkSession, io: ParquetTableIO, output_path: str):
     return io.read(spark, output_path).select("doc_id").distinct()
 
 
+def _lineage(out: DataFrame, us_col: str) -> DataFrame:
+    """Per-(run_id, partition_id) lineage summary of output rows."""
+    return out.groupBy("run_id", "partition_id").agg(
+        F.count("*").alias("docs"),
+        *[F.sum(c).alias(c) for c in LINEAGE_SUMS[us_col]],
+        (F.sum(us_col) / F.lit(1000)).cast("long").alias("wall_ms"),
+    )
+
+
 def _run_stage(
     spark: SparkSession,
     input_df: DataFrame,
     output_path: str,
     run_id: str,
     apply_op,
-    lineage_sums: tuple[str, ...],
     us_col: str,
     partitions: int | None,
     salt: int,
@@ -106,7 +123,7 @@ def _run_stage(
     processed = processed.observe(
         obs,
         F.count(F.lit(1)).alias("docs"),
-        *[F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in lineage_sums],
+        *[F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in LINEAGE_SUMS[us_col]],
     )
     io.append(processed, output_path)
     stage_totals = obs.get
@@ -114,12 +131,7 @@ def _run_stage(
     # Per-partition lineage summary (derived; output table remains the
     # source of truth — see module docstring).
     out = io.read(spark, output_path).where(F.col("run_id") == run_id)
-    lineage = out.groupBy("run_id", "partition_id").agg(
-        F.count("*").alias("docs"),
-        *[F.sum(c).alias(c) for c in lineage_sums],
-        (F.sum(us_col) / F.lit(1000)).cast("long").alias("wall_ms"),
-    )
-    io.append(lineage, output_path + STATE_SUFFIX)
+    io.append(_lineage(out, us_col), output_path + STATE_SUFFIX)
     return out, stage_totals
 
 
@@ -147,7 +159,6 @@ def run_pipeline(
         output_path,
         run_id,
         lambda df: munge_auto(df, spark, monster_threshold=monster_threshold),
-        ("pages", "tokens_total", "tokens_corrected"),
         "munge_us",
         partitions,
         salt,
@@ -189,7 +200,6 @@ def run_extract_pipeline(
         output_path,
         run_id,
         lambda df: extract_auto(df, spark),
-        ("html_blocks_kept", "pdf_lines_kept", "pdf_lines_dropped", "chars_out"),
         "extract_us",
         partitions,
         salt,
@@ -222,11 +232,5 @@ def rebuild_state(spark: SparkSession, output_path: str, io=None) -> None:
     """Reconstruct the lineage table from the output table (disaster path)."""
     io = io or default_io()
     out = io.read(spark, output_path)
-    lineage = out.groupBy("run_id", "partition_id").agg(
-        F.count("*").alias("docs"),
-        F.sum("pages").alias("pages"),
-        F.sum("tokens_total").alias("tokens_total"),
-        F.sum("tokens_corrected").alias("tokens_corrected"),
-        (F.sum("munge_us") / F.lit(1000)).cast("long").alias("wall_ms"),
-    )
-    io.overwrite(lineage, output_path + STATE_SUFFIX)
+    us_col = next(c for c in LINEAGE_SUMS if c in out.columns)
+    io.overwrite(_lineage(out, us_col), output_path + STATE_SUFFIX)

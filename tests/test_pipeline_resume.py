@@ -129,3 +129,26 @@ def test_extract_resume_matches_clean_run(spark, web_corpus_df, tmp_path_factory
     state = read_state(spark, out)
     assert {r.run_id for r in state.collect()} == {"e1", "e2"}
     assert state.agg(F.sum("docs")).collect()[0][0] == 20
+
+
+@pytest.mark.parametrize("pipeline", ["munge", "extract"])
+def test_rebuild_state_reproduces_lineage(
+    spark, corpus_df, web_corpus_df, tmp_path_factory, pipeline
+):
+    df, run = {
+        "munge": (corpus_df, run_pipeline),
+        "extract": (web_corpus_df, run_extract_pipeline),
+    }[pipeline]
+    out = str(tmp_path_factory.mktemp("rebuild") / "out")
+    half = [r.doc_id for r in df.select("doc_id").collect()][:10]
+    run(spark, df.where(F.col("doc_id").isin(half)), out, run_id="a", partitions=4)
+    run(spark, df, out, run_id="b", partitions=4)
+
+    def lineage_rows():
+        state = read_state(spark, out)
+        return state.columns, sorted(tuple(r) for r in state.collect())
+
+    written = lineage_rows()
+    assert {r[0] for r in written[1]} == {"a", "b"}
+    rebuild_state(spark, out)
+    assert lineage_rows() == written
