@@ -14,9 +14,9 @@ Architecture (Spark-first):
   ``catalog`` seam).
 - The whole per-document correction cascade (header strip, ligature/long-s
   normalization, hyphen rejoin, dictionary/variant/correction lookups,
-  f/s disambiguation) runs inside ONE vectorized Arrow-batched pandas UDF
-  (``operators.munge``): JVM<->Python crossing happens once, in Arrow
-  record batches, never per row.
+  f/s disambiguation) runs inside ONE ``mapInArrow`` stage
+  (``operators.munge`` over ``operators.stage``): JVM<->Python crossing
+  happens once, in Arrow record batches, never per row.
 - Rulesets are broadcast once per application (``rulesets.loader``).
 - Resumability is a left-anti join against a state table plus per-partition
   lineage appends (``pipeline``).

@@ -1,6 +1,6 @@
 """Spark-side main-content extraction operator (SPEC.md part II): HTML
-boilerplate strip + PDF/layout parse as ONE Arrow-batched ``mapInArrow``
-pass over the interleaved spans table.
+boilerplate strip + PDF/layout parse as ONE ``mapInArrow`` pass over the
+interleaved spans table (the Arrow boundary itself lives in ``stage.py``).
 
 Independent implementation of the spec: ``oracle/extract.py`` builds a
 DOM tree and walks it recursively; this operator consumes parser events
@@ -18,12 +18,8 @@ size cap in session.py bounds per-batch memory against skewed docs.
 from __future__ import annotations
 
 import re
-import time
-from typing import Iterator
 
 from html.parser import HTMLParser
-
-from pyspark.sql import types as T
 
 from ..oracle.extract import (
     BLOCK_TAGS,
@@ -36,14 +32,9 @@ from ..oracle.extract import (
     PRUNE_TAGS,
     VOID_TAGS,
 )
-from .munge import INPUT_SCHEMA  # same spans table contract
-from .worker import pin_spark_home_zips
+from .stage import doc_stage, output_schema, reassemble, route, span_rows, span_stage
 
-EXTRACT_OUTPUT_SCHEMA = T.StructType(
-    list(INPUT_SCHEMA.fields)
-    + [T.StructField(f, T.LongType(), True) for f in EXTRACT_METRIC_FIELDS]
-    + [T.StructField("extract_us", T.LongType(), True)]
-)
+EXTRACT_OUTPUT_SCHEMA = output_schema(EXTRACT_METRIC_FIELDS, "extract_us")
 
 _WS_RE = re.compile(r"\s+")
 
@@ -458,69 +449,13 @@ def _extract_doc_stream(kinds, texts) -> tuple[list[str], dict]:
     return out_texts, m
 
 
-def make_extract_arrow():
-    """(doc_id, spans) -> EXTRACT_OUTPUT_SCHEMA, flat-Arrow in and out
-    (same zero-dict plumbing as the munge operator — see its docstring
-    for why mapInArrow beats mapInPandas on list<struct> columns)."""
-    import pyarrow as pa
-
-    def extract_arrow(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        pin_spark_home_zips()
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            doc_ids = batch.column(0)
-            spans_col = batch.column(1)
-            if isinstance(spans_col, pa.ChunkedArray):  # pragma: no cover
-                spans_col = spans_col.combine_chunks()
-            offsets = spans_col.offsets.to_pylist()
-            flat = spans_col.values
-            kinds = flat.field("kind").to_pylist()
-            texts = flat.field("text").to_pylist()
-
-            new_texts: list[str] = list(texts)
-            metric_cols: dict[str, list[int]] = {f: [] for f in EXTRACT_METRIC_FIELDS}
-            timings: list[int] = []
-            for r in range(batch.num_rows):
-                lo, hi = offsets[r], offsets[r + 1]
-                t0 = time.monotonic()
-                out, m = _extract_doc_stream(kinds[lo:hi], texts[lo:hi])
-                timings.append(int((time.monotonic() - t0) * 1e6))
-                new_texts[lo:hi] = out
-                for f in EXTRACT_METRIC_FIELDS:
-                    metric_cols[f].append(m[f])
-
-            struct_arr = pa.StructArray.from_arrays(
-                [
-                    flat.field("kind"),
-                    pa.array(new_texts, type=pa.string()),
-                    flat.field("media_ref"),
-                    flat.field("offset"),
-                ],
-                names=["kind", "text", "media_ref", "offset"],
-            )
-            spans_out = pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int32()), struct_arr
-            )
-            arrays = [doc_ids, spans_out]
-            names = ["doc_id", "spans"]
-            for f in EXTRACT_METRIC_FIELDS:
-                arrays.append(pa.array(metric_cols[f], type=pa.int64()))
-                names.append(f)
-            arrays.append(pa.array(timings, type=pa.int64()))
-            names.append("extract_us")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return extract_arrow
-
-
 def extract(df, spark=None):
     """DataFrame (doc_id, spans) -> (doc_id, spans', extraction metrics).
 
     No broadcast state needed (unlike munge's rulesets): the heuristics
     are compiled into the closure. ``spark`` accepted for signature
     symmetry with ``munge``."""
-    return df.mapInArrow(make_extract_arrow(), schema=EXTRACT_OUTPUT_SCHEMA)
+    return doc_stage(df, lambda: _extract_doc_stream, EXTRACT_METRIC_FIELDS, "extract_us")
 
 
 # ---------------------------------------------------------------------------
@@ -531,112 +466,20 @@ def extract(df, spark=None):
 # perfect skew elimination at the cost of two shuffles.
 # ---------------------------------------------------------------------------
 
-_SPAN_ROWS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("pos", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-    ]
-    + [T.StructField(f, T.LongType()) for f in EXTRACT_METRIC_FIELDS]
-    + [T.StructField("extract_us", T.LongType())]
-)
-
-
-def _extract_span_rows(batches: Iterator["pa.RecordBatch"]):
-    import pyarrow as pa
-
-    pin_spark_home_zips()
-
-    for batch in batches:
-        if batch.num_rows == 0:
-            continue
-        cols = {n: batch.column(i).to_pylist() for i, n in enumerate(batch.schema.names)}
-        out_texts = []
-        metric_cols = {f: [] for f in EXTRACT_METRIC_FIELDS}
-        timings = []
-        for kind, text in zip(cols["kind"], cols["text"]):
-            t0 = time.monotonic()
-            new_texts, m = _extract_doc_stream([kind], [text])
-            timings.append(int((time.monotonic() - t0) * 1e6))
-            out_texts.append(new_texts[0])
-            for f in EXTRACT_METRIC_FIELDS:
-                metric_cols[f].append(m[f])
-        arrays = [
-            pa.array(cols["doc_id"], type=pa.string()),
-            pa.array(cols["pos"], type=pa.int32()),
-            pa.array(cols["kind"], type=pa.string()),
-            pa.array(out_texts, type=pa.string()),
-            pa.array(cols["media_ref"], type=pa.string()),
-            pa.array(cols["offset"], type=pa.int32()),
-        ]
-        names = ["doc_id", "pos", "kind", "text", "media_ref", "offset"]
-        for f in EXTRACT_METRIC_FIELDS:
-            arrays.append(pa.array(metric_cols[f], type=pa.int64()))
-            names.append(f)
-        arrays.append(pa.array(timings, type=pa.int64()))
-        names.append("extract_us")
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
-
 
 def extract_exploded(df, spark=None, partitions=None):
     """(doc_id, spans) -> EXTRACT_OUTPUT_SCHEMA via span-level
-    parallelism: posexplode → per-span extraction → array_sort
-    reassembly. Byte-equal to ``extract`` (pytest-asserted) — including
-    docs whose spans array is EMPTY: posexplode emits no rows for them,
-    so they are unioned back with empty spans and zeroed metrics rather
-    than silently dropped."""
-    from pyspark.sql import functions as F
-
-    sess = df.sparkSession
-    par = partitions or sess.sparkContext.defaultParallelism * 4
-    # size(NULL) is -1, so <= 0 also catches NULL-spans rows, which the
-    # whole-doc path emits as empty-array docs — coalesce to match.
-    spans_type = df.schema["spans"].dataType
-    empties = df.where(F.coalesce(F.size("spans"), F.lit(0)) <= 0).select(
-        "doc_id",
-        F.coalesce(F.col("spans"), F.array().cast(spans_type)).alias("spans"),
-        *[F.lit(0).cast("long").alias(f) for f in EXTRACT_METRIC_FIELDS],
-        F.lit(0).cast("long").alias("extract_us"),
-    )
-    rows = (
-        df.select("doc_id", F.posexplode("spans").alias("pos", "s"))
-        .select(
-            "doc_id",
-            F.col("pos").cast("int").alias("pos"),
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
-            F.col("s.offset").alias("offset"),
-        )
-        .repartition(par, "doc_id", "pos")
-    )
-    done = rows.mapInArrow(_extract_span_rows, schema=_SPAN_ROWS_SCHEMA)
-    span_struct = F.struct(
-        F.col("pos"),
-        F.struct("kind", "text", "media_ref", "offset").alias("s"),
-    )
-    agg = done.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(span_struct)), lambda x: x["s"]
-        ).alias("spans"),
-        *[F.sum(f).alias(f) for f in EXTRACT_METRIC_FIELDS],
-        F.sum("extract_us").alias("extract_us"),
-    )
-    out_cols = [f.name for f in EXTRACT_OUTPUT_SCHEMA.fields]
-    return agg.select(out_cols).unionByName(empties.select(out_cols))
+    parallelism: explode → per-span extraction → reassembly. Byte-equal
+    to ``extract`` (pytest-asserted), including docs whose spans array is
+    empty or NULL."""
+    par = partitions or df.sparkSession.sparkContext.defaultParallelism * 4
+    rows = span_rows(df).repartition(par, "doc_id", "pos")
+    done = span_stage(rows, lambda: _extract_doc_stream, EXTRACT_METRIC_FIELDS, "extract_us")
+    return reassemble(done, EXTRACT_METRIC_FIELDS, "extract_us")
 
 
 def extract_auto(df, spark=None, monster_threshold: int = 256):
     """Route: normal docs through the single-pass operator, monsters
-    (> monster_threshold spans) through span-level explosion. NULL
-    spans count as size 0 (size(NULL) is NULL under ANSI, which would
-    silently drop the row from BOTH branches)."""
-    from pyspark.sql import functions as F
-
-    size_c = F.coalesce(F.size("spans"), F.lit(0))
-    small = df.where(size_c <= monster_threshold)
-    big = df.where(size_c > monster_threshold)
+    (> monster_threshold spans) through span-level explosion."""
+    small, big = route(df, monster_threshold)
     return extract(small, spark).unionByName(extract_exploded(big, spark))

@@ -1,17 +1,10 @@
 """Spark-side munge operator: the whole correction cascade as ONE
-Arrow-batched ``mapInArrow`` pass.
+``mapInArrow`` pass (the Arrow boundary itself lives in ``stage.py``).
 
 Independent implementation of SPEC.md (the oracle in ``oracle/munge.py``
 is the executable spec; pytest asserts span-sequence equality between the
 two). Regex-based where the oracle is loop-based, so agreement between
 them is evidence of correctness rather than shared code.
-
-Why ``mapInArrow`` and not a scalar pandas UDF: one document row must
-yield BOTH rewritten spans and a metrics struct; mapInArrow emits all
-output columns in one JVM<->Python crossing per Arrow batch, and lets us
-emit per-partition lineage without a second pass. The batch size is
-capped by ``spark.sql.execution.arrow.maxRecordsPerBatch`` (session.py)
-so skewed monster documents cannot blow executor memory.
 
 At cluster scale: this node is the only Python stage in the plan; the
 scan, resume anti-join, repartition, and writes around it stay JVM-side
@@ -21,32 +14,10 @@ scan, resume anti-join, repartition, and writes around it stay JVM-side
 from __future__ import annotations
 
 import re
-import time
-from typing import Iterator
-
-import pandas as pd
-
-from pyspark.sql import types as T
 
 from ..rulesets.loader import PUNCT, Rulesets
-from .worker import pin_spark_home_zips
-
-SPAN_STRUCT = T.StructType(
-    [
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("offset", T.IntegerType(), True),
-    ]
-)
-SPANS_TYPE = T.ArrayType(SPAN_STRUCT)
-
-INPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), True),
-        T.StructField("spans", SPANS_TYPE, True),
-    ]
-)
+# INPUT_SCHEMA is the spans table contract; callers import it from here
+from .stage import INPUT_SCHEMA, doc_stage, output_schema  # noqa: F401
 
 METRIC_FIELDS = [
     "pages",
@@ -57,13 +28,7 @@ METRIC_FIELDS = [
     "pagenum_lines_removed",
 ]
 
-OUTPUT_SCHEMA = T.StructType(
-    list(INPUT_SCHEMA.fields)
-    + [T.StructField(f, T.LongType(), True) for f in METRIC_FIELDS]
-    # wall-clock microseconds spent munging this doc (lineage/skew telemetry;
-    # not part of the oracle metric contract)
-    + [T.StructField("munge_us", T.LongType(), True)]
-)
+OUTPUT_SCHEMA = output_schema(METRIC_FIELDS, "munge_us")
 
 _PUNCT_RE = re.escape(PUNCT)
 _TOKEN_SPLIT_RE = re.compile(rf"^([{_PUNCT_RE}]*)(.*?)([{_PUNCT_RE}]*)$", re.DOTALL)
@@ -334,95 +299,15 @@ class _Munger:
         return out_texts, out_metrics
 
     # ---- whole document -------------------------------------------------
-    def munge_doc(self, spans: list[dict]) -> tuple[list[dict], dict]:
-        m = {f: 0 for f in METRIC_FIELDS}
-        page_idx = [k for k, s in enumerate(spans) if s["kind"] == "page"]
-        texts, per_page = self.munge_pages([spans[k]["text"] for k in page_idx])
-        for pm in per_page:
-            for f in METRIC_FIELDS:
-                m[f] += pm[f]
-        out = [dict(s) for s in spans]
-        for pi, k in enumerate(page_idx):
-            out[k]["text"] = texts[pi]
-        return out, m
-
-
-def make_munge_arrow(rulesets_bc):
-    """Returns the mapInArrow function (doc_id, spans) -> OUTPUT_SCHEMA.
-
-    mapInArrow instead of mapInPandas: pandas conversion of a
-    ``list<struct>`` column materializes one Python dict PER SPAN on both
-    directions, which is memory-bandwidth-bound and anti-scales past ~8
-    cores. Reading the flat Arrow child arrays (kind/text/media_ref/
-    offset) and rebuilding the ListArray directly skips all of that; the
-    only Python objects created are the strings the cascade needs anyway.
-    """
-    import pyarrow as pa
-
-    def munge_arrow(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        pin_spark_home_zips()
-        munger = _Munger(rulesets_bc.value)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            doc_ids = batch.column(0)
-            spans_col = batch.column(1)
-            if isinstance(spans_col, pa.ChunkedArray):  # pragma: no cover
-                spans_col = spans_col.combine_chunks()
-            offsets = spans_col.offsets.to_pylist()
-            flat = spans_col.values
-            kinds = flat.field("kind").to_pylist()
-            texts = flat.field("text").to_pylist()
-            refs = flat.field("media_ref").to_pylist()
-            offs = flat.field("offset").to_pylist()
-
-            # offsets are ABSOLUTE positions into the full child array
-            # (a sliced ListArray keeps them absolute), so index flat
-            # lists directly and rebuild the list with the same offsets.
-            new_texts: list[str] = list(texts)
-            metric_cols: dict[str, list[int]] = {f: [] for f in METRIC_FIELDS}
-            timings: list[int] = []
-            for r in range(batch.num_rows):
-                lo, hi = offsets[r], offsets[r + 1]
-                spans = [
-                    {
-                        "kind": kinds[i],
-                        "text": texts[i],
-                        "media_ref": refs[i],
-                        "offset": offs[i],
-                    }
-                    for i in range(lo, hi)
-                ]
-                t0 = time.monotonic()
-                out, m = munger.munge_doc(spans)
-                timings.append(int((time.monotonic() - t0) * 1e6))
-                for i, s in zip(range(lo, hi), out):
-                    new_texts[i] = s["text"]
-                for f in METRIC_FIELDS:
-                    metric_cols[f].append(m[f])
-
-            struct_arr = pa.StructArray.from_arrays(
-                [
-                    flat.field("kind"),
-                    pa.array(new_texts, type=pa.string()),
-                    flat.field("media_ref"),
-                    flat.field("offset"),
-                ],
-                names=["kind", "text", "media_ref", "offset"],
-            )
-            spans_out = pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int32()), struct_arr
-            )
-            arrays = [doc_ids, spans_out]
-            names = ["doc_id", "spans"]
-            for f in METRIC_FIELDS:
-                arrays.append(pa.array(metric_cols[f], type=pa.int64()))
-                names.append(f)
-            arrays.append(pa.array(timings, type=pa.int64()))
-            names.append("munge_us")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return munge_arrow
+    def munge_doc(self, kinds: list, texts: list) -> tuple[list, dict]:
+        """One document's span kinds and texts -> (its span texts with
+        every page corrected, summed metrics). Media spans pass through."""
+        page_idx = [k for k, kind in enumerate(kinds) if kind == "page"]
+        new, per_page = self.munge_pages([texts[k] for k in page_idx])
+        out = list(texts)
+        for k, text in zip(page_idx, new):
+            out[k] = text
+        return out, {f: sum(pm[f] for pm in per_page) for f in METRIC_FIELDS}
 
 
 def munge(df, spark, rulesets_bc=None):
@@ -430,4 +315,4 @@ def munge(df, spark, rulesets_bc=None):
     from ..rulesets.loader import broadcast_rulesets
 
     bc = rulesets_bc or broadcast_rulesets(spark)
-    return df.mapInArrow(make_munge_arrow(bc), schema=OUTPUT_SCHEMA)
+    return doc_stage(df, lambda: _Munger(bc.value).munge_doc, METRIC_FIELDS, "munge_us")

@@ -54,12 +54,18 @@ def test_chunked_equals_oracle(spark, monsters):
 
 def test_munge_auto_routes_and_unions(spark):
     docs = generate_corpus(seed=33, n_docs=10, monster_frac=0.3, body_lines=(4, 7))
-    df = spark.createDataFrame(corpus_to_rows(docs), schema=INPUT_SCHEMA)
+    df = spark.createDataFrame(
+        corpus_to_rows(docs + [("vol.empty", [])]), schema=INPUT_SCHEMA
+    )
+    # a NULL spans row (nullable per INPUT_SCHEMA) must not be dropped
+    df = df.unionByName(spark.createDataFrame([("vol.null", None)], schema=INPUT_SCHEMA))
     out = _collect(munge_auto(df, spark, monster_threshold=40, chunk_pages=16))
-    assert len(out) == 10
+    assert len(out) == 12
     for doc_id, spans in docs:
         golden, _ = munge_document(doc_id, spans, RS)
         assert out[doc_id][0] == [tuple(s) for s in golden], doc_id
+    for doc_id in ("vol.empty", "vol.null"):
+        assert out[doc_id] == ([], {f: 0 for f in METRIC_FIELDS}), doc_id
 
 
 def test_media_heavy_boundaries(spark):

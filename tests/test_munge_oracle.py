@@ -186,8 +186,6 @@ def test_ligature_expansion_can_trigger_fs_correction():
     assert out[0].text == "stop"
     assert metrics.tokens_corrected == 1
 
-    eng_out, eng_metrics = _Munger(RS).munge_doc(
-        [{"kind": "page", "text": "ﬅop", "media_ref": "", "offset": 0}]
-    )
-    assert eng_out[0]["text"] == "stop"
+    eng_texts, eng_metrics = _Munger(RS).munge_doc(["page"], ["ﬅop"])
+    assert eng_texts[0] == "stop"
     assert eng_metrics["tokens_corrected"] == 1

@@ -189,6 +189,23 @@ def test_munge_pipeline_single_python_stage(spark):
     assert "EvalPython" not in plan  # no row-at-a-time Python
 
 
+def test_munge_auto_plan_is_arrow_only(spark):
+    """Both munge paths cross into Python through Arrow: the single-pass
+    mapInArrow stage and the monster path's grouped applyInArrow, never
+    pandas or row-at-a-time Python."""
+    from datamunging_spark.operators.chunked import munge_auto
+
+    rows = corpus_to_rows(
+        generate_corpus(seed=5, n_docs=6, monster_frac=0.5, body_lines=(4, 6))
+    )
+    df = spark.createDataFrame(rows, schema=INPUT_SCHEMA)
+    plan = plan_of(munge_auto(df, spark, monster_threshold=40))
+    assert "MapInArrow" in plan
+    assert "FlatMapGroupsInArrow" in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "EvalPython" not in plan
+
+
 def test_json_and_window_plans(spark, sf_dir):
     js = plan_of(RELATIONAL_QUERIES["json_extract"][0](spark, sf_dir))
     assert "partial_" in js  # partial agg before shuffle
